@@ -26,8 +26,12 @@ loop) and run inside Arrow-batched pandas UDFs.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 import numpy as np
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 BLOCK_SIZE = 128
 
@@ -205,29 +209,6 @@ def varbyte_encode_offsets(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return buf, offsets
 
 
-def varbyte_encode_segments(values: np.ndarray, seg_starts: np.ndarray) -> list[bytes]:
-    """Varbyte-encode ``values`` once, returning one bytes object per
-    segment (``seg_starts`` = start index of each segment).
-
-    Concatenating the returned segments is bit-identical to
-    ``varbyte_encode(values)`` — used to pre-encode per-(doc, term)
-    position payloads in the tokenizer so the posting encoder can
-    assemble block payloads by slicing, never re-encoding."""
-    v = np.asarray(values, dtype=np.uint64)
-    seg_starts = np.asarray(seg_starts, dtype=np.int64)
-    if v.size == 0:
-        return [b""] * len(seg_starts)
-    buf = varbyte_encode(v)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += (v >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    ends = np.cumsum(nbytes)
-    byte_starts = np.concatenate(([0], ends))[seg_starts]
-    byte_ends = np.concatenate((byte_starts[1:], [ends[-1]]))
-    mv = memoryview(buf)
-    return [bytes(mv[a:b]) for a, b in zip(byte_starts, byte_ends)]
-
-
 # ---------------------------------------------------------------- positions
 
 def encode_positions(pos_concat: np.ndarray, tfs: np.ndarray) -> bytes:
@@ -263,3 +244,62 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     # subtract the running prefix that leaked across segment boundaries
     offs = np.concatenate(([0], cs[starts[1:] - 1]))
     return cs - np.repeat(offs, t)
+
+
+# ---------------------------------------------------------------- frames
+
+def _segmented_delta_docs(buf: bytes, firsts: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """Absolute doc ids from one concatenated varbyte delta stream:
+    global cumsum, then the per-block leak is subtracted back out via
+    the segment trick (each block's offset is the cumsum value at the
+    previous block's last element) and ``b_first`` re-based per block.
+    Every block must hold at least one posting: an empty one would make
+    the segment trick read the wrong block's cumsum."""
+    if not (nb > 0).all():
+        raise ValueError("posting block with zero postings")
+    deltas = varbyte_decode(buf).view(np.int64)
+    cs = np.cumsum(deltas)
+    starts = np.cumsum(nb) - nb
+    offs = (
+        np.concatenate(([0], cs[starts[1:] - 1])) if nb.size > 1 else np.zeros(1, np.int64)
+    )
+    return cs - np.repeat(offs, nb) + np.repeat(firsts, nb)
+
+
+def _decode_frame_postings(sub: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized decode of posting rows (any mix of blocks) → (docs,
+    tfs, norms): ONE varbyte pass over all blocks — concatenated
+    varbyte streams are self-delimiting — instead of a Python loop per
+    block.  Per-block posting counts come off the norm payload (exactly
+    1 byte per posting)."""
+    doc_bufs = [b for row in sub["b_docs"] for b in row]
+    if not doc_bufs:
+        z = np.empty(0, np.int64)
+        return z, z.copy(), z.copy()
+    norm_bufs = [b for row in sub["b_norms"] for b in row]
+    tf_bufs = [b for row in sub["b_tfs"] for b in row]
+    firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
+    nb = np.fromiter((len(x) for x in norm_bufs), np.int64, count=len(norm_bufs))
+    docs = _segmented_delta_docs(b"".join(doc_bufs), firsts, nb)
+    tfs = varbyte_decode(b"".join(tf_bufs)).view(np.int64)
+    norms = np.frombuffer(b"".join(norm_bufs), dtype=np.uint8).astype(np.int64)
+    return docs, tfs, norms
+
+
+def _decode_frame_docs(sub: pd.DataFrame) -> np.ndarray:
+    """Docs-only vectorized decode (NOT exclusion / constant score):
+    per-block value counts are read off the doc stream's own varbyte
+    continuation bits, so only (b_first, b_docs) is ever fetched from
+    parquet.  Returns doc ids in posting order (not deduplicated)."""
+    doc_bufs = [b for row in sub["b_docs"] for b in row]
+    if not doc_bufs:
+        return np.empty(0, np.int64)
+    firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
+    blens = np.fromiter((len(x) for x in doc_bufs), np.int64, count=len(doc_bufs))
+    if not (blens > 0).all():
+        raise ValueError("posting block with zero postings")
+    buf = b"".join(doc_bufs)
+    raw = np.frombuffer(buf, dtype=np.uint8)
+    n_at = np.cumsum((raw & 0x80) == 0)
+    nb = np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
+    return _segmented_delta_docs(buf, firsts, nb)

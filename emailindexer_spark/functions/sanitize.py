@@ -7,8 +7,6 @@ vectorized pandas operations:
   and stop at a line whose trimmed form equals (case-insensitively)
   ``-----Original Message-----`` (reference BodyReplyRemover.java:10-24;
   kept lines re-joined with ``\\n``),
-* bracket stripping ``<x>`` → ``x`` for id-like columns (reference
-  AddressCleaner.java:9-24),
 * empty/blank-row filtering (reference SanitizingEmailHandler.java:26-29).
 """
 
@@ -36,8 +34,3 @@ def remove_quoted_replies_str(text: str | None) -> str:
         return ""
     head = _MARKER_RE.split(text, maxsplit=1)[0]
     return _QUOTE_LINE_RE.sub("", head)
-
-
-def strip_brackets(s: pd.Series) -> pd.Series:
-    """AddressCleaner parity: `<x>` → `x` (only when both present)."""
-    return s.str.replace(r"^<(.*)>$", r"\1", regex=True)

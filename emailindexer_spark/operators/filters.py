@@ -77,11 +77,6 @@ def tag_filter_untagged(df: DataFrame, tags_df: DataFrame) -> DataFrame:
     return df.join(tags_df.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"], "left_anti")
 
 
-def and_filters(*preds: Column) -> Column:
-    """ConditionBuilder.andWhere (util/ConditionBuilder.java:39-47)."""
-    return reduce(lambda a, b: a & b, preds) if preds else F.lit(True)
-
-
 def or_filters(*preds: Column) -> Column:
     """F11 — OrFilter *intended* semantics (OrFilter.java:13-29 is buggy
     in the reference: its blank-clause filter is inverted and always

@@ -22,13 +22,14 @@ Replaces the reference's sequential paged scan → Lucene IndexWriter loop
                     sampling cutoff; hash, not modulo, so doc_id-
                     periodic terms cannot dodge the sample) → explicit
                     skew splitting: df > threshold terms are cut into
-                    doc-range splits → ONE tokenize pass feeding the
-                    wide (term, split) shuffle directly (no persist, no
-                    token-stream round-trip through storage) →
-                    mapInPandas encodes each sorted run into
-                    delta+varbyte blocks with block-max metadata → one
-                    cheap exchange of the ENCODED rows lays files out
-                    by part = md5(term) % P (query-side pruning)
+                    doc-range splits → ONE tokenize pass packing
+                    map-side (term, split) chunk rows → write_postings,
+                    the writer appends and compaction share: the wide
+                    (term, split) shuffle, mapInPandas encodes each
+                    sorted run into delta+varbyte blocks with block-max
+                    metadata, one cheap exchange of the ENCODED rows
+                    lays files out by part = md5(term) % P (query-side
+                    pruning)
   stage term_dict   (term, part, df) table range-partitioned + sorted by
                     term — Lucene's sorted term dictionary: prefix
                     queries expand here (vocab-scale scan with row-group
@@ -41,8 +42,8 @@ Every stage commits a snapshot in the manifest (sources/checkpoint.py);
 postings after a mid-build kill.
 
 Scale notes (the 100 TB story):
-* the token stream is materialized exactly once, map-side, flowing
-  straight into the ONE wide per-token shuffle (term, split); per-doc
+* the token stream is materialized exactly once, map-side, packed into
+  chunk rows for the ONE wide (term, split) shuffle; per-doc
   stats never touch per-token rows (they are column expressions over the
   text), so no second token-stream shuffle, persist, or storage bounce,
 * heavy-term detection samples a fixed-size deterministic doc subset
@@ -58,7 +59,6 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import math
 import os
 import time
 from typing import Iterator
@@ -70,17 +70,14 @@ from pyspark.sql import functions as F
 
 from emailindexer_spark.functions.codec import (
     BLOCK_SIZE,
-    encode_blocks,
     encode_blocks_vec,
     varbyte_decode,
     varbyte_encode_offsets,
-    varbyte_encode_segments,
 )
 from emailindexer_spark.functions.sanitize import remove_quoted_replies
 from emailindexer_spark.functions.smallfloat import encode_lengths, norm_byte_expr
 from emailindexer_spark.functions.tokenizer import (
     token_counts,
-    tokenize_series,
     tokenize_series_codes,
 )
 from emailindexer_spark.operators.docid import (
@@ -95,10 +92,6 @@ POSTINGS_SCHEMA = (
     "b_minnorm array<int>, b_docs array<binary>, b_tfs array<binary>, b_norms array<binary>, "
     "b_pos array<binary>"
 )
-
-TF_SCHEMA = "doc_id long, term string, tf int, dl int, norm int"
-#: positions ride as pre-encoded segmented delta+varbyte bytes per row
-TF_SCHEMA_POS = TF_SCHEMA + ", pos binary"
 
 #: SPARK_GRAFT_BUILD_TRACE=1 prints per-phase wall times — the
 #: scaling-diagnosis knob: run the same build at two parallelism levels
@@ -159,102 +152,10 @@ def ensure_parallelism(df: DataFrame, target: int) -> DataFrame:
     return df
 
 
-def term_part_expr(term_col, num_parts: int):
-    """part = int(md5(term)[:8], 16) % P — driver-computable (python
-    hashlib gives the same value), so query planning prunes partitions
-    without a Spark job."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(term_col), 1, 8), 16, 10).cast("long"),
-        F.lit(num_parts),
-    ).cast("int")
-
-
 def term_part_py(term: str, num_parts: int) -> int:
     import hashlib
 
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % num_parts
-
-
-def _tokenize_to_tf_rows(simple: bool, positions: bool = False, fields: tuple[str, ...] = ("text",)):
-    """mapInPandas: (doc_id, <fields...>) batches → (doc_id, term, tf,
-    dl, norm[, pos]).  With ``positions``, each row additionally carries
-    the doc's ascending token positions for that term, PRE-ENCODED as
-    segmented delta+varbyte bytes (the posting encoder assembles block
-    payloads by concatenation).  Non-default fields emit FIELD-PREFIXED
-    term keys (``field:term``) with that field's own dl/norm — one
-    shared term space carrying per-field statistics (Lucene's per-field
-    terms dicts flattened)."""
-
-    def one_field(pdf: pd.DataFrame, col: str, prefix: str) -> pd.DataFrame | None:
-        toks = tokenize_series(pdf[col], simple=simple)
-        nlens = toks.str.len().to_numpy(dtype=np.int64)
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        if nlens.sum() == 0:
-            return None
-        flat_docs = np.repeat(doc_ids, nlens)
-        flat_terms = np.concatenate([t for t in toks.to_numpy() if len(t)])
-        if prefix:
-            flat_terms = (prefix + pd.Series(flat_terms)).to_numpy()
-        dl_map = pd.Series(nlens, index=doc_ids)
-        if not positions:
-            grouped = (
-                pd.DataFrame({"doc_id": flat_docs, "term": flat_terms})
-                .groupby(["doc_id", "term"], sort=False)
-                .size()
-                .reset_index(name="tf")
-            )
-            dl = dl_map.reindex(grouped["doc_id"]).to_numpy(dtype=np.int64)
-            return pd.DataFrame(
-                {
-                    "doc_id": grouped["doc_id"],
-                    "term": grouped["term"],
-                    "tf": grouped["tf"].astype("int32"),
-                    "dl": dl.astype("int32"),
-                    "norm": encode_lengths(dl).astype("int32"),
-                }
-            )
-        starts = np.concatenate(([0], np.cumsum(nlens[:-1])))
-        flat_pos = np.arange(int(nlens.sum()), dtype=np.int64) - np.repeat(starts, nlens)
-        # numeric lexsort over factorized terms (string sort is the
-        # slow path); positions stay ascending within each group
-        codes, uniques = pd.factorize(flat_terms)
-        order = np.lexsort((flat_pos, codes, flat_docs))
-        dv, cv, pv = flat_docs[order], codes[order], flat_pos[order]
-        change = np.nonzero((dv[1:] != dv[:-1]) | (cv[1:] != cv[:-1]))[0] + 1
-        gstarts = np.concatenate(([0], change))
-        tf = np.diff(np.concatenate((gstarts, [dv.size])))
-        # pre-encode each group's positions as segmented delta+varbyte —
-        # the posting encoder assembles blocks by CONCATENATION, and the
-        # Arrow/shuffle payload is one compact binary per row
-        d = np.diff(pv, prepend=0)
-        d[gstarts] = pv[gstarts]
-        pos_bufs = varbyte_encode_segments(d.astype(np.uint64), gstarts)
-        gdocs = dv[gstarts]
-        dl = dl_map.reindex(gdocs).to_numpy(dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "doc_id": gdocs,
-                "term": uniques[cv[gstarts]],
-                "tf": tf.astype("int32"),
-                "dl": dl.astype("int32"),
-                "norm": encode_lengths(dl).astype("int32"),
-                "pos": pos_bufs,
-            }
-        )
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for fi, f in enumerate(fields):
-                got = one_field(pdf, f, "" if fi == 0 else f + ":")
-                if got is not None:
-                    frames.append(got)
-            if len(frames) == 1:
-                yield frames[0]
-            elif frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return gen
 
 
 #: map-side pre-aggregated posting chunks: ONE row per (term, split,
@@ -303,24 +204,79 @@ def _tokenize_term_df_counts(simple: bool, fields: tuple[str, ...] = ("text",)):
     return gen
 
 
+def _pack_chunk_rows(
+    keys: np.ndarray,
+    key_terms: np.ndarray,
+    heavy: dict,
+    n_rows: int,
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    norms: np.ndarray,
+    pos_buf: bytes | None,
+    pos_offs: np.ndarray | None,
+) -> pd.DataFrame:
+    """Postings → packed CHUNK_SCHEMA rows, one per (key, split) run.
+
+    Postings arrive grouped by ``keys`` (one int per posting, docs
+    ascending within a key); ``key_terms[k]`` is key k's term.  A term
+    in ``heavy`` ({term: n_splits}) has its run cut at split_id =
+    doc_id // ceil(n_rows / n_splits); every other term is split 0.
+    Posting j's position payload is ``pos_buf[pos_offs[j]:pos_offs[j+1]]``
+    (``pos_buf`` is None without positions).  Docs are delta-encoded
+    with an absolute reset at every row start (negative cross-key
+    diffs are always overwritten — rows never span keys); ONE varbyte
+    pass per column, then per-row memoryview slices."""
+    key_splits = (
+        np.fromiter((heavy.get(t, 0) for t in key_terms), np.int64, count=len(key_terms))
+        if heavy
+        else np.zeros(len(key_terms), np.int64)
+    )
+    ns = key_splits[keys]
+    span = -(-max(n_rows, 1) // np.maximum(ns, 1))
+    sids = np.where(ns > 0, docs // span, 0)
+    new = np.ones(docs.size, dtype=bool)
+    new[1:] = (keys[1:] != keys[:-1]) | (sids[1:] != sids[:-1])
+    bs = np.flatnonzero(new)
+    be = np.append(bs[1:], docs.size)
+    dd = np.diff(docs, prepend=0)
+    dd[bs] = docs[bs]
+    docs_buf, docs_offs = varbyte_encode_offsets(dd.astype(np.uint64))
+    tfs_buf, tfs_offs = varbyte_encode_offsets(tfs.astype(np.uint64))
+    norms_buf = norms.astype(np.uint8).tobytes()
+    mv_d, mv_t = memoryview(docs_buf), memoryview(tfs_buf)
+    if pos_buf is None:
+        pos_col = [b""] * bs.size
+    else:
+        mv_p = memoryview(pos_buf)
+        pos_col = [bytes(mv_p[pos_offs[a]:pos_offs[b]]) for a, b in zip(bs, be)]
+    return pd.DataFrame(
+        {
+            "term": key_terms[keys[bs]],
+            "split_id": sids[bs].astype(np.int32),
+            "docs": [bytes(mv_d[docs_offs[a]:docs_offs[b]]) for a, b in zip(bs, be)],
+            "tfs": [bytes(mv_t[tfs_offs[a]:tfs_offs[b]]) for a, b in zip(bs, be)],
+            "norms": [norms_buf[a:b] for a, b in zip(bs, be)],
+            "pos": pos_col,
+        }
+    )
+
+
 def _tokenize_to_chunk_rows(
     simple: bool,
     positions: bool,
     fields: tuple[str, ...],
-    heavy_bc,
-    n_rows: int,
+    heavy_bc=None,
+    n_rows: int = 0,
 ):
     """mapInPandas: (doc_id, <fields...>) batches → packed CHUNK_SCHEMA
     rows, one per (term, split) per batch.
 
-    All heavy work is vectorized: one lexsort into term-major order, ONE
-    varbyte pass each for docs/tfs/positions with per-value byte offsets
-    (functions/codec.varbyte_encode_offsets), then per-row memoryview
-    slices — the only Python-level loop is over the batch's UNIQUE terms
-    (to apply the heavy-split boundaries), never over tokens or docs.
+    All heavy work is vectorized: one lexsort into term-major order, then
+    _pack_chunk_rows — the only Python-level loop is the heavy-split
+    lookup over the batch's UNIQUE terms, never over tokens or docs.
     ``heavy_bc`` is a broadcast {term_key: n_splits} from the sample
-    pass; split_id = doc_id // ceil(n_rows / n_splits) exactly as the
-    old broadcast-join computed it."""
+    pass (None: every term is one split 0); ``n_rows`` sizes the
+    heavy-split doc ranges."""
 
     def one_field(pdf: pd.DataFrame, col: str, prefix: str) -> pd.DataFrame | None:
         nlens, codes, uniques = tokenize_series_codes(pdf[col], simple=simple)
@@ -340,74 +296,24 @@ def _tokenize_to_chunk_rows(
         gb = np.nonzero((cv[1:] != cv[:-1]) | (dv[1:] != dv[:-1]))[0] + 1
         gstarts = np.concatenate(([0], gb))
         gstarts_ext = np.concatenate((gstarts, [dv.size]))
-        tf = np.diff(gstarts_ext).astype(np.int64)
         gdocs = dv[gstarts]
-        gcodes = cv[gstarts]
         dl = dl_map.reindex(gdocs).to_numpy(dtype=np.int64)
-        norms_buf = encode_lengths(dl).astype(np.uint8).tobytes()
+        pos_buf = pos_offs = None
         if positions:
             d = np.diff(pv, prepend=0)
             d[gstarts] = pv[gstarts]  # per-(doc,term) segment-first absolute
-            pos_buf, pos_offs = varbyte_encode_offsets(d.astype(np.uint64))
-            mv_p = memoryview(pos_buf)
-        # per-term group ranges
-        tb = np.nonzero(gcodes[1:] != gcodes[:-1])[0] + 1
-        tstarts = np.concatenate(([0], tb))
-        tends = np.concatenate((tb, [gstarts.size]))
-        heavy = heavy_bc.value if heavy_bc is not None else {}
-        # final row boundaries in group-index space (heavy terms split
-        # at doc-range edges; docs ascend within a term's run)
-        row_terms: list[str] = []
-        row_sids: list[int] = []
-        bs: list[int] = []
-        be: list[int] = []
-        for ts, te in zip(tstarts, tends):
-            term = uniques[gcodes[ts]]
-            ns = heavy.get(term)
-            if not ns:
-                row_terms.append(term)
-                row_sids.append(0)
-                bs.append(ts)
-                be.append(te)
-                continue
-            span = -(-n_rows // ns)
-            sids = gdocs[ts:te] // span
-            ch = np.nonzero(sids[1:] != sids[:-1])[0] + 1
-            ss = np.concatenate(([0], ch))
-            se = np.concatenate((ch, [sids.size]))
-            for a, b in zip(ss, se):
-                row_terms.append(term)
-                row_sids.append(int(sids[a]))
-                bs.append(ts + int(a))
-                be.append(ts + int(b))
-        bs_a = np.asarray(bs, dtype=np.int64)
-        be_a = np.asarray(be, dtype=np.int64)
-        # docs: delta-encoded with an absolute reset at every ROW start
-        # (negative cross-term diffs are always overwritten — rows never
-        # span terms), ONE varbyte pass + per-row slices
-        dd = np.diff(gdocs, prepend=0)
-        dd[bs_a] = gdocs[bs_a]
-        docs_buf, docs_offs = varbyte_encode_offsets(dd.astype(np.uint64))
-        tfs_buf, tfs_offs = varbyte_encode_offsets(tf.astype(np.uint64))
-        mv_d, mv_t = memoryview(docs_buf), memoryview(tfs_buf)
-        docs_col = [bytes(mv_d[docs_offs[a]:docs_offs[b]]) for a, b in zip(bs_a, be_a)]
-        tfs_col = [bytes(mv_t[tfs_offs[a]:tfs_offs[b]]) for a, b in zip(bs_a, be_a)]
-        norms_col = [norms_buf[a:b] for a, b in zip(bs_a, be_a)]
-        if positions:
-            p0 = pos_offs[gstarts_ext[bs_a]]
-            p1 = pos_offs[gstarts_ext[be_a]]
-            pos_col = [bytes(mv_p[a:b]) for a, b in zip(p0, p1)]
-        else:
-            pos_col = [b""] * len(bs)
-        return pd.DataFrame(
-            {
-                "term": row_terms,
-                "split_id": np.asarray(row_sids, dtype=np.int32),
-                "docs": docs_col,
-                "tfs": tfs_col,
-                "norms": norms_col,
-                "pos": pos_col,
-            }
+            pos_buf, val_offs = varbyte_encode_offsets(d.astype(np.uint64))
+            pos_offs = val_offs[gstarts_ext]
+        return _pack_chunk_rows(
+            cv[gstarts],
+            uniques,
+            heavy_bc.value if heavy_bc is not None else {},
+            n_rows,
+            gdocs,
+            np.diff(gstarts_ext),
+            encode_lengths(dl),
+            pos_buf,
+            pos_offs,
         )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -427,14 +333,15 @@ def _tokenize_to_chunk_rows(
 
 def _encode_chunk_runs(block_size: int, num_parts: int):
     """mapInPandas over CHUNK_SCHEMA rows clustered by (term, split_id)
-    → POSTINGS_SCHEMA rows, byte-identical to the per-token path's
-    output (same encode_blocks over the same doc-sorted content).
+    → POSTINGS_SCHEMA rows: each run's chunks are merged in doc order
+    and cut into blocks by encode_blocks_vec (bit-identical to the
+    scalar encode_blocks reference); a block's position payload is the
+    concatenation of its docs' payloads.
 
     The whole reduce partition is decoded in a handful of vectorized
     passes (concatenated varbyte streams are self-delimiting, so one
     decode covers every row); the per-run loop touches numpy slices
-    only.  Partition volume is bounded by the shuffle width exactly as
-    the per-token layout was — rows are smaller, not fewer per key."""
+    only.  Partition volume is bounded by the shuffle width."""
 
     def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         batches = [b for b in it if len(b)]
@@ -519,110 +426,30 @@ def _encode_chunk_runs(block_size: int, num_parts: int):
     return enc
 
 
-def _encode_one(term: str, split_id: int, pdf: pd.DataFrame, block_size: int, num_parts: int) -> dict:
-    docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-    order = np.argsort(docs, kind="stable")
-    docs = docs[order]
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)[order]
-    eb = encode_blocks(
-        docs,
-        tfs,
-        pdf["norm"].to_numpy(dtype=np.int64)[order],
-        block_size=block_size,
+def write_postings(chunks: DataFrame, path: str, num_parts: int, block_size: int) -> None:
+    """The one postings writer: builds, appends and compaction all land
+    their CHUNK_SCHEMA rows on disk here.
+
+    One wide (term, split_id) exchange over max(num_parts, 2 × cores)
+    reducers (skew headroom), _encode_chunk_runs per sorted run, then a
+    cheap exchange of the ENCODED rows (~1% of the token stream) lays
+    files out one part = md5(term) % P per task."""
+    width = max(num_parts, 2 * chunks.sparkSession.sparkContext.defaultParallelism)
+    (
+        chunks.repartition(width, "term", "split_id")
+        .sortWithinPartitions("term", "split_id")
+        .mapInPandas(_encode_chunk_runs(block_size, num_parts), POSTINGS_SCHEMA)
+        .repartition(num_parts, "part")
+        # LEAD with the partition column: the dynamic-partition writer
+        # requires rows ordered by "part" and otherwise inserts its own
+        # (unstable) sort, which silently destroys the term order inside
+        # each file — with it satisfied, rows really are (term, split)-
+        # sorted on disk and row-group min/max pruning on `term` works
+        .sortWithinPartitions("part", "term", "split_id")
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .parquet(path)
     )
-    if "pos" in pdf.columns:
-        # rows carry pre-encoded per-doc position payloads (tokenizer) —
-        # a block's payload is just their concatenation in doc order
-        bufs = pdf["pos"].to_numpy()[order]
-        b_pos = [
-            b"".join(bufs[i * block_size : min((i + 1) * block_size, docs.size)])
-            for i in range(len(eb.n))
-        ]
-    else:
-        b_pos = [b""] * len(eb.n)
-    return {
-        "term": term,
-        "split_id": split_id,
-        "part": term_part_py(term, num_parts),
-        "df_row": int(docs.size),
-        "first_doc": int(docs[0]),
-        "last_doc": int(docs[-1]),
-        "b_first": eb.first_doc.tolist(),
-        "b_last": eb.last_doc.tolist(),
-        "b_n": eb.n.tolist(),
-        "b_maxtf": eb.max_tf.tolist(),
-        "b_minnorm": eb.min_norm.tolist(),
-        "b_docs": eb.doc_bytes,
-        "b_tfs": eb.tf_bytes,
-        "b_norms": eb.norm_bytes,
-        "b_pos": b_pos,
-    }
-
-
-def _encode_group(block_size: int, num_parts: int):
-    """applyInPandas over one (term, split_id) group → one posting row.
-    Kept for the incremental/streaming path, where batches are small."""
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iat[0]
-        split_id = int(pdf["split_id"].iat[0])
-        return pd.DataFrame([_encode_one(term, split_id, pdf, block_size, num_parts)])
-
-    return enc
-
-
-def _encode_runs(block_size: int, num_parts: int):
-    """mapInPandas over partitions hash-clustered by (term, split_id) and
-    sorted so each group is a contiguous run.
-
-    One Arrow stream per PARTITION instead of one pandas call per GROUP:
-    a vocabulary-scale build has 10^4..10^8 mostly-tiny groups, and the
-    per-group Arrow round-trip dominates applyInPandas; run detection via
-    a vectorized group-boundary scan removes that overhead.  Runs spanning
-    Arrow batch boundaries are carried over."""
-
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        out: list[dict] = []
-
-        def flush_complete(pdf: pd.DataFrame, last_incomplete: bool):
-            nonlocal carry
-            keys = pdf["term"].to_numpy()
-            splits = pdf["split_id"].to_numpy()
-            # boundaries where (term, split) changes
-            change = np.nonzero((keys[1:] != keys[:-1]) | (splits[1:] != splits[:-1]))[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            last = len(starts) - 1
-            for gi, (s, e) in enumerate(zip(starts, ends)):
-                if last_incomplete and gi == last:
-                    carry = pdf.iloc[s:e]
-                    return
-                out.append(
-                    _encode_one(keys[s], int(splits[s]), pdf.iloc[s:e], block_size, num_parts)
-                )
-            carry = None
-
-        for pdf in it:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            flush_complete(pdf, last_incomplete=True)
-            if out:
-                yield pd.DataFrame(out)
-                out = []
-        if carry is not None and len(carry):
-            out.append(
-                _encode_one(
-                    carry["term"].iat[0], int(carry["split_id"].iat[0]), carry, block_size, num_parts
-                )
-            )
-        if out:
-            yield pd.DataFrame(out)
-
-    return enc
 
 
 class IndexBuilder:
@@ -686,15 +513,12 @@ class IndexBuilder:
                 man.stages.pop(st)
             man._flush()
 
-        # two distinct width knobs: the WIDE per-token shuffle spreads
-        # over at least num_parts reducers (skew headroom), but SCAN
-        # parallelism floors scale with the session's cores only — a
-        # num_parts floor there would force a full-corpus exchange even
-        # when the input's natural splits already feed every core
-        # (pure overhead, and its map side is as serial as the input)
-        par_target = max(
-            self.num_parts, 2 * self.spark.sparkContext.defaultParallelism
-        )
+        # SCAN parallelism floors scale with the session's cores only
+        # (the wide postings shuffle has its own num_parts floor in
+        # write_postings) — a num_parts floor here would force a
+        # full-corpus exchange even when the input's natural splits
+        # already feed every core (pure overhead, and its map side is as
+        # serial as the input)
         scan_target = 2 * self.spark.sparkContext.defaultParallelism
 
         import threading
@@ -1053,9 +877,7 @@ class IndexBuilder:
                 # docstring): the wide shuffle carries ~batch-vocabulary
                 # rows with ~5 B/posting varbyte payloads instead of one
                 # 40+-byte row per (doc, term), and the reduce-side sort
-                # orders chunk rows, not postings.  The SECOND exchange
-                # moves only the ENCODED payload (~1% of the token
-                # stream) to lay files out one-part-per-task.
+                # orders chunk rows, not postings.
                 chunks = src.mapInPandas(
                     _tokenize_to_chunk_rows(
                         self.simple_tokens,
@@ -1066,28 +888,9 @@ class IndexBuilder:
                     ),
                     CHUNK_SCHEMA,
                 )
-                postings = (
-                    chunks.repartition(par_target, "term", "split_id")
-                    .sortWithinPartitions("term", "split_id")
-                    .mapInPandas(
-                        _encode_chunk_runs(self.block_size, self.num_parts),
-                        POSTINGS_SCHEMA,
-                    )
-                )
                 t1 = time.time()
-                (
-                    postings.repartition(self.num_parts, "part")
-                    # LEAD with the partition column: the dynamic-
-                    # partition writer requires rows ordered by "part"
-                    # and otherwise inserts its own (unstable) sort,
-                    # which silently destroyed the term order inside
-                    # each file — with it satisfied, rows really are
-                    # (term, split)-sorted on disk and row-group min/max
-                    # pruning on `term` works as designed
-                    .sortWithinPartitions("part", "term", "split_id")
-                    .write.mode("overwrite")
-                    .partitionBy("part")
-                    .parquet(man.stage_path("postings"))
+                write_postings(
+                    chunks, man.stage_path("postings"), self.num_parts, self.block_size
                 )
                 _tr("postings_write", t1)
                 man.commit_stage("postings", seconds=round(time.time() - t0, 2))
@@ -1313,6 +1116,3 @@ def avgdl_from_stats(stats: dict) -> float:
     n = stats.get("n_docs", 0)
     return (stats["total_tokens"] / n) if n else 0.0
 
-
-def n_shards_for(n_rows: int, target_per_shard: int = 262_144) -> int:
-    return max(1, math.ceil(n_rows / target_per_shard))

@@ -44,8 +44,9 @@ from pyspark.sql import functions as F
 
 from emailindexer_spark.functions import bm25
 from emailindexer_spark.functions.codec import (
+    _decode_frame_docs,
+    _decode_frame_postings,
     decode_positions,
-    varbyte_decode,
 )
 from emailindexer_spark.functions.smallfloat import encode_lengths
 from emailindexer_spark.plans import wand as wand_mod
@@ -71,57 +72,6 @@ from emailindexer_spark.sources.checkpoint import Manifest
 SCORE_SCHEMA = "doc_id long, score double"
 TERM_SCORE_SCHEMA = "term string, doc_id long, score double"
 RESULT_COLS = ["rank", "doc_id", "conv_id", "turn_idx", "score"]
-
-
-def _segmented_delta_docs(buf: bytes, firsts: np.ndarray, nb: np.ndarray) -> np.ndarray:
-    """Absolute doc ids from one concatenated varbyte delta stream:
-    global cumsum, then the per-block leak is subtracted back out via
-    the segment trick (each block's offset is the cumsum value at the
-    previous block's last element) and ``b_first`` re-based per block."""
-    deltas = varbyte_decode(buf).view(np.int64)
-    cs = np.cumsum(deltas)
-    starts = np.cumsum(nb) - nb
-    offs = (
-        np.concatenate(([0], cs[starts[1:] - 1])) if nb.size > 1 else np.zeros(1, np.int64)
-    )
-    return cs - np.repeat(offs, nb) + np.repeat(firsts, nb)
-
-
-def _decode_frame_postings(sub: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized decode of posting rows (any mix of blocks) → (docs,
-    tfs, norms): ONE varbyte pass over all blocks — concatenated
-    varbyte streams are self-delimiting — instead of a Python loop per
-    block.  Per-block posting counts come off the norm payload (exactly
-    1 byte per posting)."""
-    doc_bufs = [b for row in sub["b_docs"] for b in row]
-    if not doc_bufs:
-        z = np.empty(0, np.int64)
-        return z, z.copy(), z.copy()
-    norm_bufs = [b for row in sub["b_norms"] for b in row]
-    tf_bufs = [b for row in sub["b_tfs"] for b in row]
-    firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
-    nb = np.fromiter((len(x) for x in norm_bufs), np.int64, count=len(norm_bufs))
-    docs = _segmented_delta_docs(b"".join(doc_bufs), firsts, nb)
-    tfs = varbyte_decode(b"".join(tf_bufs)).view(np.int64)
-    norms = np.frombuffer(b"".join(norm_bufs), dtype=np.uint8).astype(np.int64)
-    return docs, tfs, norms
-
-
-def _decode_frame_docs(sub: pd.DataFrame) -> np.ndarray:
-    """Docs-only vectorized decode (NOT exclusion / constant score):
-    per-block value counts are read off the doc stream's own varbyte
-    continuation bits, so only (b_first, b_docs) is ever fetched from
-    parquet.  Returns doc ids in posting order (not deduplicated)."""
-    doc_bufs = [b for row in sub["b_docs"] for b in row]
-    if not doc_bufs:
-        return np.empty(0, np.int64)
-    firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
-    blens = np.fromiter((len(x) for x in doc_bufs), np.int64, count=len(doc_bufs))
-    buf = b"".join(doc_bufs)
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    n_at = np.cumsum((raw & 0x80) == 0)
-    nb = np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
-    return _segmented_delta_docs(buf, firsts, nb)
 
 
 def _sorted_member_mask(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:

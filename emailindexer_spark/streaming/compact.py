@@ -9,15 +9,17 @@ TieredMergePolicy does for segments (reference: Lucene merges implied
 by S6, SURVEY.md §4 "Segment merge policy") — WITHOUT re-tokenizing or
 touching the text:
 
-* posting rows are decoded to (term, doc_id, tf, norm[, pos]) entries —
-  the per-doc POSITION payloads are never decoded, only byte-split at
-  doc boundaries (the codec's segmented delta+varbyte encodes each
-  doc's positions independently, so merged runs re-assemble by
-  concatenation, plans/builder._encode_one),
+* each posting row becomes chunk rows (plans/builder.CHUNK_SCHEMA):
+  doc ids come off the vectorized frame decoder and are delta-coded
+  again per chunk; tfs, norms and positions are already in chunk
+  layout once a row's blocks are concatenated (each doc's positions
+  are encoded independently, so they are only byte-split at doc
+  boundaries, never decoded),
 * heavy terms are re-split from EXACT per-term df (summed over rows —
-  no sampling needed here), then the builder's own run encoder
-  (_encode_runs) re-encodes, so compacted output is byte-compatible
-  with a fresh build's,
+  no sampling needed here) at the build's own doc-range boundaries,
+  and the chunks go through the build's postings writer
+  (plans/builder.write_postings), so compacted output is byte-identical
+  to a fresh build over the same rows,
 * the new postings directory is swapped in with a rename pair +
   leftover repair (``_repair_partial``): a crash mid-swap is healed by
   every entry point that touches the postings dir — the next
@@ -43,48 +45,38 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from emailindexer_spark.functions.codec import decode_block
-from emailindexer_spark.plans.builder import POSTINGS_SCHEMA, _encode_runs
+from emailindexer_spark.functions.codec import _decode_frame_postings
+from emailindexer_spark.plans.builder import (
+    CHUNK_SCHEMA,
+    _pack_chunk_rows,
+    write_postings,
+)
 from emailindexer_spark.sources.checkpoint import Manifest
 
-_ENTRY_SCHEMA = "term string, doc_id long, tf int, norm int"
-_ENTRY_SCHEMA_POS = _ENTRY_SCHEMA + ", pos binary"
 
-
-def _decode_entries(positions: bool):
-    """Posting rows → per-doc entries; position payloads byte-split at
-    doc boundaries (varbyte continuation-bit scan), never decoded."""
+def _postings_to_chunk_rows(positions: bool, heavy_bc, n_rows: int):
+    """mapInPandas: posting rows → CHUNK_SCHEMA rows, heavy terms
+    (broadcast {term: n_splits}) cut at split_id = doc_id //
+    ceil(n_rows / n_splits).  Position payloads are byte-split at doc
+    boundaries (varbyte continuation-bit scan), never decoded."""
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        heavy = heavy_bc.value if heavy_bc is not None else {}
         for pdf in it:
-            terms, docs, tfs, norms, poss = [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                for i in range(len(r.b_docs)):
-                    d, t, n = decode_block(
-                        int(r.b_first[i]), r.b_docs[i], r.b_tfs[i], r.b_norms[i]
-                    )
-                    terms.append(np.full(d.size, r.term, dtype=object))
-                    docs.append(d)
-                    tfs.append(t)
-                    norms.append(n)
-                    if positions:
-                        raw = r.b_pos[i]
-                        b = np.frombuffer(raw, dtype=np.uint8)
-                        ends = np.nonzero((b & 0x80) == 0)[0] + 1
-                        byte_ends = ends[np.cumsum(t) - 1]
-                        byte_starts = np.concatenate(([0], byte_ends[:-1]))
-                        poss.extend(raw[a:z] for a, z in zip(byte_starts, byte_ends))
-            if not docs:
+            if not len(pdf):
                 continue
-            out = {
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(docs),
-                "tf": np.concatenate(tfs).astype("int32"),
-                "norm": np.concatenate(norms).astype("int32"),
-            }
+            docs, tfs, norms = _decode_frame_postings(pdf)
+            terms = pdf["term"].to_numpy()
+            keys = np.repeat(np.arange(len(pdf)), pdf["df_row"].to_numpy())
+            pos_buf = pos_offs = None
             if positions:
-                out["pos"] = poss
-            yield pd.DataFrame(out)
+                pos_buf = b"".join(b for row in pdf["b_pos"] for b in row)
+                pb = np.frombuffer(pos_buf, dtype=np.uint8)
+                vends = np.flatnonzero((pb & 0x80) == 0) + 1
+                pos_offs = np.concatenate(([0], vends[np.cumsum(tfs) - 1]))
+            yield _pack_chunk_rows(
+                keys, terms, heavy, n_rows, docs, tfs, norms, pos_buf, pos_offs
+            )
 
     return gen
 
@@ -126,48 +118,24 @@ def compact_index(
 
     live = man.stage_path("postings")
     p = spark.read.parquet(live)
-    cols = ["term", "b_first", "b_docs", "b_tfs", "b_norms"] + (
-        ["b_pos"] if positions else []
-    )
-    entries = p.select(*cols).mapInPandas(
-        _decode_entries(positions), _ENTRY_SCHEMA_POS if positions else _ENTRY_SCHEMA
-    )
     # EXACT per-term df from the rows being merged — no sampling
-    heavy = (
-        p.groupBy("term")
+    heavy_map = {
+        r["term"]: int(-(-int(r["df"]) // split_target))
+        for r in p.groupBy("term")
         .agg(F.sum("df_row").alias("df"))
         .where(F.col("df") > heavy_df_threshold)
-        .withColumn("n_splits", F.ceil(F.col("df") / F.lit(split_target)).cast("int"))
-        .select("term", "n_splits")
+        .collect()
+    }
+    heavy_bc = spark.sparkContext.broadcast(heavy_map) if heavy_map else None
+    cols = ["term", "df_row", "b_first", "b_docs", "b_tfs", "b_norms"] + (
+        ["b_pos"] if positions else []
     )
-    rows = entries.join(F.broadcast(heavy), "term", "left").withColumn(
-        "split_id",
-        F.when(F.col("n_splits").isNull(), F.lit(0)).otherwise(
-            F.floor(
-                F.col("doc_id")
-                / F.ceil(F.lit(max(1, n_rows)) / F.col("n_splits")).cast("long")
-            ).cast("int")
-        ),
-    )
-    width = max(num_parts, spark.sparkContext.defaultParallelism * 2)
-    shuffle_cols = ["term", "split_id", "doc_id", "tf", "norm"] + (
-        ["pos"] if positions else []
-    )
-    compacted = (
-        rows.select(*shuffle_cols)
-        .repartition(width, "term", "split_id")
-        .sortWithinPartitions("term", "split_id", "doc_id")
-        .mapInPandas(_encode_runs(block_size, num_parts), POSTINGS_SCHEMA)
+    chunks = p.select(*cols).mapInPandas(
+        _postings_to_chunk_rows(positions, heavy_bc, n_rows), CHUNK_SCHEMA
     )
     tmp = live + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        compacted.repartition(num_parts, "part")
-        .sortWithinPartitions("term", "split_id")
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(tmp)
-    )
+    write_postings(chunks, tmp, num_parts, block_size)
     # atomic-ish swap with crash repair; term_dict content is invariant
     # (df per (term, part) is preserved by merging), so only postings move
     bak = live + ".bak"

@@ -54,13 +54,15 @@ def test_partition_pruning_layout(spark, index_dir):
 
 
 def _postings_payloads(spark, d):
+    cols = ("b_docs", "b_tfs", "b_norms", "b_pos")
     rows = (
         spark.read.parquet(os.path.join(d, "postings"))
-        .select("term", "split_id", "b_docs", "b_tfs", "b_norms")
+        .select("term", "split_id", "b_first", *cols)
         .collect()
     )
     return sorted(
-        (r["term"], r["split_id"], tuple(map(bytes, r["b_docs"])), tuple(map(bytes, r["b_tfs"])), tuple(map(bytes, r["b_norms"])))
+        (r["term"], r["split_id"], tuple(r["b_first"]))
+        + tuple(tuple(map(bytes, r[c])) for c in cols)
         for r in rows
     )
 

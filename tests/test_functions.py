@@ -479,7 +479,7 @@ class TestFastTokenizerCodes:
 
 
 class TestFrameDecode:
-    """The executor-lifted frame decoders (planner._decode_frame_*)
+    """The frame decoders (codec._decode_frame_*)
     must equal the per-block reference decode for ANY mix of terms,
     rows and block sizes (multi-row terms, single-byte and multi-byte
     varbyte deltas, segment-boundary leak correction)."""
@@ -495,7 +495,7 @@ class TestFrameDecode:
     )
     def test_frame_decode_matches_per_block(self, doc_lists, tf_mod):
         from emailindexer_spark.functions.codec import decode_block, encode_blocks_vec
-        from emailindexer_spark.plans.planner import (
+        from emailindexer_spark.functions.codec import (
             _decode_frame_docs,
             _decode_frame_postings,
         )
@@ -534,7 +534,7 @@ class TestFrameDecode:
         assert (_decode_frame_docs(pdf[["term", "b_first", "b_docs"]]) == ref_d).all()
 
     def test_frame_decode_empty(self):
-        from emailindexer_spark.plans.planner import (
+        from emailindexer_spark.functions.codec import (
             _decode_frame_docs,
             _decode_frame_postings,
         )
@@ -543,3 +543,33 @@ class TestFrameDecode:
         d, t, n = _decode_frame_postings(pdf)
         assert d.size == t.size == n.size == 0
         assert _decode_frame_docs(pdf).size == 0
+
+    def test_frame_decode_rejects_empty_block(self):
+        # an empty block would silently shift every later doc id
+        # through the segment trick; the decoders raise instead
+        from emailindexer_spark.functions.codec import (
+            _decode_frame_docs,
+            _decode_frame_postings,
+            encode_blocks_vec,
+        )
+
+        eb = encode_blocks_vec(
+            np.array([3, 9]), np.array([1, 2]), np.array([5, 6]), block_size=1
+        )
+
+        def mid_empty(blocks):
+            return [blocks[0], b"", blocks[1]]
+
+        pdf = pd.DataFrame(
+            {
+                "term": ["t"],
+                "b_first": [[3, 5, 9]],
+                "b_docs": [mid_empty(eb.doc_bytes)],
+                "b_tfs": [mid_empty(eb.tf_bytes)],
+                "b_norms": [mid_empty(eb.norm_bytes)],
+            }
+        )
+        with pytest.raises(ValueError, match="zero postings"):
+            _decode_frame_postings(pdf)
+        with pytest.raises(ValueError, match="zero postings"):
+            _decode_frame_docs(pdf)

@@ -1,10 +1,13 @@
 """Incremental / Structured Streaming ingest: appended batches integrate
 with the read path and match an oracle built in insertion order."""
 
+import glob
 import os
 import shutil
 import tempfile
 
+import pandas as pd
+import pyarrow.parquet as papq
 import pytest
 
 from emailindexer_spark.oracle import build_oracle_index, search as osearch
@@ -12,6 +15,19 @@ from emailindexer_spark.plans.builder import IndexBuilder
 from emailindexer_spark.plans.planner import SearchEngine
 from emailindexer_spark.sources.fixtures import make_transcripts
 from emailindexer_spark.streaming.ingest import incremental_append, stream_ingest
+
+
+def _unsorted_postings_files(d):
+    """(files, files whose rows are not (term, split_id)-ordered) — the
+    order row-group min/max pruning on ``term`` relies on."""
+    files = glob.glob(os.path.join(d, "postings", "part=*", "*.parquet"))
+    bad = []
+    for f in files:
+        t = papq.read_table(f, columns=["term", "split_id"])
+        keys = list(zip(t["term"].to_pylist(), t["split_id"].to_pylist()))
+        if keys != sorted(keys):
+            bad.append(os.path.relpath(f, d))
+    return files, bad
 
 
 @pytest.fixture(scope="module")
@@ -65,8 +81,6 @@ def test_manifest_first_append_visibility(spark, corpus3):
     # hidden); (2) a crash AFTER the commit but before the rename-
     # visible step is healed at the next engine open, which sees the
     # fully-appended corpus.
-    import glob
-
     import emailindexer_spark.streaming.ingest as ING
     from emailindexer_spark.sources.checkpoint import Manifest
 
@@ -147,8 +161,6 @@ def test_replayed_batch_id_is_noop_and_crash_repair(spark, corpus3):
     # of a committed batch_id must not duplicate docs or inflate stats,
     # and a crashed half-append (tagged files present, manifest not
     # committed) must be cleaned up by the retry.
-    import glob
-
     from emailindexer_spark.sources.checkpoint import Manifest
 
     base, b1, _ = corpus3
@@ -218,6 +230,8 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         )
         incremental_append(spark, d, spark.createDataFrame(b1))
         incremental_append(spark, d, spark.createDataFrame(b2))
+        files, bad = _unsorted_postings_files(d)
+        assert files and not bad, f"appended postings files out of term order: {bad}"
         eng = SearchEngine(spark, d)
         queries = [("qojema", "turns"), ("qojema fuhepi", "turns"), ('"noza guka"', "turns"), ("fuhepi", "conversations")]
         before = {
@@ -236,6 +250,8 @@ def test_compact_merges_ingested_splits(spark, corpus3):
 
         man = compact_index(spark, d)
         assert man.stats["compactions"] == 1
+        files, bad = _unsorted_postings_files(d)
+        assert files and not bad, f"compacted postings files out of term order: {bad}"
 
         eng2 = SearchEngine(spark, d)
         p2 = spark.read.parquet(os.path.join(d, "postings"))
@@ -267,3 +283,31 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         assert os.path.isdir(live) and not os.path.isdir(live + ".bak")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_compact_of_append_equals_fresh_build(spark, corpus3):
+    # build(A) + append(B) + compact == build(A ∪ B), payload for payload:
+    # B's conv_ids sort after A's, so both paths assign the same doc ids
+    from test_builder import _postings_payloads
+
+    from emailindexer_spark.streaming.compact import compact_index
+
+    base, b1, _ = corpus3
+    batch = b1.assign(conv_id="zz_" + b1["conv_id"])
+    knobs = dict(num_parts=8, heavy_df_threshold=500, split_target=400)
+    d = tempfile.mkdtemp(prefix="ix_cmp_app_")
+    fresh = tempfile.mkdtemp(prefix="ix_cmp_fresh_")
+    try:
+        IndexBuilder(spark, d, **knobs).build(spark.createDataFrame(base))
+        incremental_append(spark, d, spark.createDataFrame(batch))
+        compact_index(spark, d)
+        IndexBuilder(spark, fresh, **knobs).build(
+            spark.createDataFrame(pd.concat([base, batch], ignore_index=True))
+        )
+        got = _postings_payloads(spark, d)
+        assert any(r[1] > 0 for r in got), "fixture must exercise heavy splits"
+        assert got == _postings_payloads(spark, fresh)
+    finally:
+        for p in (d, fresh):
+            shutil.rmtree(p, ignore_errors=True)
